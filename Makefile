@@ -3,7 +3,7 @@
 
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench cc-decomp
+.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench
 
 # the full drive recipe (.claude/skills/verify/SKILL.md) in one
 # command: driver contract -> full oracle gate replica -> pytest
@@ -29,10 +29,6 @@ scaling:
 # bucketed-lake A/B at sf1 (catalog queries on co-bucketed facts)
 bucketed-bench:
 	python tools/bucketed_bench.py
-
-# dedup_clusters stage isolation across the decades
-cc-decomp:
-	python tools/cc_decomp.py
 
 test:
 	python -m pytest tests/ -x -q

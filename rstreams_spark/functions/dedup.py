@@ -240,10 +240,10 @@ def minhash_signature_np(
     invariant 22). The JVM form evaluates num_perm pmod expressions
     and updates num_perm+1 agg buffers PER SHINGLE ROW — the dominant
     per-trigger cost of the streaming minhash gate (1.65 s of a
-    ~4.3 s trigger at 50k docs — tools/gate_minhash_decomp.py); here
-    each Arrow batch computes the whole (rows × num_perm) permutation
-    block in ~3·num_perm vector ops and reduces per-doc with one
-    cython groupby-min.
+    ~4.3 s trigger at 50k docs — PERF.md "Round 11: the minhash ingest
+    gate"); here each Arrow batch computes the whole (rows × num_perm)
+    permutation block in ~3·num_perm vector ops and reduces per-doc
+    with one cython groupby-min.
 
     Exactness: the base hash stays the JVM md5 ``hash64`` (computed
     in-plan before the kernel); the permutation algebra
@@ -865,6 +865,7 @@ def connected_components_hybrid(
     # materialized by its own metadata count (invariants 10/11).
     level, n_tasks = e, _uf_tasks(n_edges)
     contracted = None
+    exact = False
     for _ in range(MAX_CONTRACTION_LEVELS):
         contracted = (
             level.repartition(n_tasks, "a")
@@ -873,7 +874,8 @@ def connected_components_hybrid(
         )
         m = contracted.count()  # materializes this level
         if n_tasks == 1:
-            break  # exact contraction achieved
+            exact = True  # a single-task union-find is the labeling
+            break
         level = contracted.select(
             F.col("node").alias("a"), F.col("lmin").alias("b")
         )
@@ -889,7 +891,7 @@ def connected_components_hybrid(
         .distinct()
         .select("node", F.col("node").alias("lmin"))
     )
-    if n_tasks == 1:
+    if exact:
         # the loop broke because the LAST contraction ran as ONE task:
         # a single-task union-find over the whole (possibly already
         # level-contracted) edge set IS the exact component-min

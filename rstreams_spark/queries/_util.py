@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,7 +24,10 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     filesourcePartitionFileCacheSize provide — NOT data or result
     caching: every action still scans the parquet inputs. A rewritten
     file (new mtime/size) misses the cache and is re-read, so
-    regenerated probe corpora stay correct within one process."""
+    regenerated probe corpora stay correct within one process. For a
+    parquet DIRECTORY the key folds in the newest entry mtime and the
+    total entry size, so an in-place rewrite of a part file (which
+    leaves the directory's own stat unchanged) misses too."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # parquet timestamps read as timestamp_ntz; epoch outputs
     # (unix_timestamp) interpret ntz in the session zone — pin UTC so
@@ -36,7 +40,14 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark._rstreams_table_cache = cache
     try:
         st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+        mtime, size = st.st_mtime_ns, st.st_size
+        if stat.S_ISDIR(st.st_mode):
+            with os.scandir(path) as entries:
+                for e in entries:
+                    est = e.stat()
+                    mtime = max(mtime, est.st_mtime_ns)
+                    size += est.st_size
+        key = (os.path.abspath(path), mtime, size)
     except OSError:
         key = None  # non-local/odd path: fall through uncached
     if key is not None and key in cache:

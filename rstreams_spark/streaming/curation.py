@@ -15,21 +15,18 @@ same multiplication-only keep thresholds — so the two
 implementations cross-check each other (tests assert row-level
 equality against the batch/oracle-verified query).
 
-Decontamination gates, in the order users should reach for them:
+Decontamination gates, both fully JVM-native (no Python per row):
 
 1. ``stream_decontaminate_ngrams_native`` — the DEFAULT. Tokenize +
    n-gram assembly + xxhash64-InSet membership all inside
-   whole-stage codegen; no Python per row. Eval shards up to
-   ``EVAL_GRAM_MAX`` distinct grams.
+   whole-stage codegen. Eval shards up to ``EVAL_GRAM_MAX`` distinct
+   grams; keeps match the batch oracle
+   (``queries.dedupq.decontaminate_ngrams``) up to xxhash64
+   collisions.
 2. ``stream_decontaminate_ngrams_bloom`` — past the InSet budget:
    k getbit probes against one packed-long array literal, O(1)
    per-trigger planning, ~8M-gram capacity, ~5e-4 FPR (false
    positives over-drop — the safe direction).
-3. ``stream_decontaminate_ngrams`` — the exact-Python-set fallback
-   for tiny shards / debugging: per-row gram generator against a
-   broadcast frozenset; keeps are byte-identical to the batch
-   oracle with zero hash-collision caveat, but it pays Python per
-   row — not the ingest hot path.
 """
 
 from __future__ import annotations
@@ -48,8 +45,7 @@ from ..queries.textq import (
 __all__ = [
     "stream_quality_repetition", "stream_source_mix",
     "stream_budget_sample", "stream_sanitize_measures",
-    "eval_gram_broadcast",
-    "stream_decontaminate_ngrams", "eval_gram_hashes",
+    "eval_gram_hashes",
     "stream_decontaminate_ngrams_native",
     "eval_gram_bloom", "stream_decontaminate_ngrams_bloom",
 ]
@@ -285,86 +281,6 @@ def stream_sanitize_measures(
     return out
 
 
-def eval_gram_broadcast(spark, eval_docs: DataFrame, text_col: str = "text",
-                        n: int = 3):
-    """Broadcast the distinct word n-grams of a (bounded, static)
-    eval/benchmark shard as ``(n, frozenset)`` — the exact-set
-    version of the ingest-time contamination filter. ``n`` rides
-    INSIDE the payload so the consuming gate can never check k-grams
-    against a j-gram set (a mismatch would silently disable the gate
-    — zero strings match, zero docs drop). Eval sets are benchmark-
-    sized by contract (≪ corpus); at the point the exact set no
-    longer fits an executor, the same grams feed a Bloom filter
-    instead (identical call shape, probabilistic drop) — the exact
-    set is also the oracle for that Bloom variant."""
-    from ..functions.dedup import doc_shingles
-
-    grams = (
-        doc_shingles(eval_docs, text_col, n)
-        .select("shingle")
-        .distinct()
-        .collect()
-    )
-    return spark.sparkContext.broadcast(
-        (n, frozenset(r["shingle"] for r in grams))
-    )
-
-
-def _iter_shingles(text, n: int):
-    """Python mirror of functions.text.tokens + shingles, as a
-    GENERATOR: lowercase, non-alphanumeric runs → one space,
-    whitespace split, space-joined n-grams, yielded lazily so a
-    membership ``any()`` genuinely stops at the first contaminated
-    gram (the hot drop path of the ingest gate never builds the full
-    set). Must stay normalization-identical to the batch path or the
-    stream gate diverges from the oracle-verified flagging. Non-str
-    payloads (NULL text → None/NaN) yield nothing — the batch twin's
-    tokens(null) likewise produces no shingles, so such docs pass."""
-    if not isinstance(text, str):
-        return
-    # İ→I fold mirrors the batch normalizer (text.py::_fold_i)
-    toks = _NORM_RE.sub(" ", text.replace("İ", "I").lower()).strip().split()
-    for i in range(len(toks) - n + 1):
-        yield " ".join(toks[i : i + n])
-
-
-def stream_decontaminate_ngrams(
-    df: DataFrame,
-    eval_grams,  # broadcast from eval_gram_broadcast
-    text_col: str = "text",
-) -> DataFrame:
-    """Exact-Python-set decontamination gate — the TINY-SHARD
-    FALLBACK, not the default: prefer
-    ``stream_decontaminate_ngrams_native`` (whole-stage-codegen
-    InSet, no Python per row) and, past its budget,
-    ``stream_decontaminate_ngrams_bloom`` (see the module docstring's
-    gate ladder). This variant keeps byte-exact parity with the batch
-    oracle (no hash step at all), which makes it the cross-check and
-    debug path.
-
-    Live train/eval decontamination — the streaming counterpart of
-    ``queries.dedupq.decontaminate_ngrams`` as an INGEST-TIME gate:
-    any document sharing a word n-gram with the broadcast eval set
-    (built by ``eval_gram_broadcast``, which fixes ``n``) is dropped
-    before it ever lands in the corpus. Stateless Arrow
-    ``mapInPandas`` (append-safe, no watermark, no shuffle, no state
-    store): each task checks its own batch against the broadcast set
-    — the embarrassingly-parallel 100 TB ingest shape — and the
-    lazy gram generator lets the first hit short-circuit."""
-    schema = df.schema
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        n, ev = eval_grams.value
-        for pdf in batches:
-            keep = [
-                not any(g in ev for g in _iter_shingles(txt, n))
-                for txt in pdf[text_col]
-            ]
-            yield pdf[keep]
-
-    return df.mapInPandas(run, schema)
-
-
 EVAL_GRAM_MAX = 500_000  # InSet literal budget. Deliberately modest
 # (ADVICE r6): the isin() list crosses py4j as plan literals and —
 # under Structured Streaming's per-microbatch re-analysis — that
@@ -414,10 +330,12 @@ def stream_decontaminate_ngrams_native(
     eval_gram_set: tuple[int, list[int]],
     text_col: str = "text",
 ) -> DataFrame:
-    """Fully JVM-native live decontamination gate — the scale path
-    that replaces ``stream_decontaminate_ngrams``'s per-row Python
-    gram loop: tokenization, n-gram assembly and membership all run
-    inside whole-stage codegen. Membership is ``xxhash64(gram) ∈
+    """Fully JVM-native live decontamination gate — the streaming
+    counterpart of ``queries.dedupq.decontaminate_ngrams`` as an
+    INGEST-TIME gate: any document sharing a word n-gram with the
+    eval set is dropped before it lands in the corpus. Tokenization,
+    n-gram assembly and membership all run inside whole-stage
+    codegen. Membership is ``xxhash64(gram) ∈
     InSet(literal longs)`` — Catalyst converts the ``isin`` over a
     static list into a hash-set probe built once per PLAN, so the
     per-gram cost is one native hash + one set lookup, no broadcast
@@ -433,16 +351,17 @@ def stream_decontaminate_ngrams_native(
     that per-trigger planning cost in mind.
 
     ``eval_gram_set`` is the ``(n, hashes)`` pair exactly as
-    ``eval_gram_hashes`` returns it — n rides INSIDE the payload
-    (same defense as ``eval_gram_broadcast``) so the gate can never
-    probe k-grams against a j-gram hash set.
+    ``eval_gram_hashes`` returns it — n rides INSIDE the payload so
+    the gate can never probe k-grams against a j-gram hash set (a
+    mismatch would silently disable the gate — zero grams match,
+    zero docs drop).
 
-    Keep decision parity with the Python/exact gate is exact up to
+    Keep decision parity with the batch oracle is exact up to
     xxhash64 collisions between a document gram and an eval gram
     (P ≈ |doc grams|·|eval|/2⁶⁴ — vanishing; parity-tested on the
-    full fixture against the exact gate and the batch oracle).
+    full fixture against the batch oracle).
     NULL/empty text yields an empty gram array (``exists`` → false),
-    matching the exact gate's pass-through of tokenless docs.
+    matching the batch oracle's pass-through of tokenless docs.
     """
     from pyspark.sql import functions as F
 
@@ -475,7 +394,7 @@ def eval_gram_bloom(
     scale path past ``eval_gram_hashes``' ``EVAL_GRAM_MAX`` exact
     InSet budget. Returns ``(n, k, m, words)``: gram order ``n``
     rides inside the payload (the same can't-mix-n defense as the
-    exact gate), ``k`` probe hashes, ``m`` filter bits (power of
+    InSet gate), ``k`` probe hashes, ``m`` filter bits (power of
     two), and ``words`` = m/64 packed longs.
 
     The build is one distributed Spark job — no gram list ever
@@ -493,7 +412,7 @@ def eval_gram_bloom(
     decontamination); false negatives are impossible. A shard whose
     filter would exceed ``BLOOM_MAX_BITS`` raises instead of
     shipping an unbounded literal (same fail-loud contract as the
-    exact gate's budget).
+    InSet gate's budget).
     """
     from pyspark.sql import functions as F
 
@@ -554,10 +473,10 @@ def stream_decontaminate_ngrams_bloom(
     per-microbatch incremental-planning cost O(1) — re-analysis
     walks a single Literal node, not millions of In children — and
     lifts the eval-shard capacity to ``BLOOM_MAX_BITS/bits_per_gram``
-    (~8M grams at the defaults, ~4× the exact gate's budget, in a
+    (~8M grams at the defaults, ~4× the InSet gate's budget, in a
     16 MB plan literal).
 
-    Semantics vs the exact gate: every document the exact gate drops
+    Semantics vs the InSet gate: every document the InSet gate drops
     is dropped here too (a Bloom filter has no false negatives), and
     clean documents are additionally dropped with probability ≈ the
     filter's FPR per gram (~5e-4 at the defaults) — over-dropping is
@@ -566,7 +485,7 @@ def stream_decontaminate_ngrams_bloom(
     build evaluated, so build/probe agreement is by construction.
     The k probe indices are let-bound via ``transform`` so each
     position hashes once (invariant 5); NULL/empty text passes
-    through exactly like both sibling gates.
+    through exactly like the InSet gate.
     """
     from pyspark.sql import functions as F
 

@@ -148,8 +148,8 @@ def minhash_index_fps(
     so it is provably a dup before any signature work runs: on real
     ingest traffic the dup mass is dominated by exact copies, and
     each one skips the whole shingle→64-permutation→band→verify
-    pipeline (the measured 85%+ of per-trigger cost —
-    tools/gate_minhash_decomp.py).
+    pipeline (the measured 85%+ of per-trigger cost — PERF.md
+    "Round 11: the minhash ingest gate").
 
     Docs BELOW the shingle order are excluded on purpose: their
     shingle set is empty, the minhash gate scores them 0/0 → no
@@ -568,69 +568,6 @@ def _cell_dup_ids_np(
     return (
         a_tag.unionByName(i_tag)
         .groupBy("__r")
-        .applyInPandas(gate, f"{id_col} bigint")
-    )
-
-
-def _cell_dup_ids_np_cogroup(
-    arrivals: DataFrame,
-    indexed: DataFrame,
-    tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Cogroup-shaped twin of ``_cell_dup_ids_np`` for BUCKETED index
-    lakes (r10 verdict item 7): the union→groupBy shape must
-    re-shuffle BOTH sides every trigger (a union discards the
-    children's partitioning), while ``cogroup`` requires each side
-    clustered by the key independently — an index table WRITTEN
-    bucketed by cell satisfies its side with ZERO exchange, so each
-    trigger shuffles only the arriving batch (plan-pinned in
-    tests/test_plans.py; same math, same chunking, row-identical —
-    tools/bucketed_dedup_bench.py measures the delta)."""
-    import numpy as np
-    import pandas as pd
-
-    from ..functions.similarity import stack_f64
-
-    def gate(apdf, ipdf):
-        if not len(apdf) or not len(ipdf):
-            return pd.DataFrame({id_col: []}).astype({id_col: "int64"})
-        pids = ipdf["index_id"].to_numpy()
-        P = stack_f64(
-            list(ipdf["index_emb"]), pids, "_cell_dup_ids_np_cogroup"
-        )
-        pn = ipdf["index_norm"].to_numpy(dtype=np.float64)
-        out = []
-        for lo in range(0, len(apdf), 1024):
-            sub = apdf.iloc[lo:lo + 1024]
-            ids = sub[id_col].to_numpy()
-            V = stack_f64(
-                list(sub[vec_col]), ids, "_cell_dup_ids_np_cogroup"
-            )
-            if V.shape[1] != P.shape[1]:
-                raise ValueError(
-                    f"_cell_dup_ids_np_cogroup: arrival dims "
-                    f"{V.shape[1]} != index dims {P.shape[1]} — "
-                    "arrivals must match the index embedding "
-                    "dimensionality"
-                )
-            vn = sub["v_norm"].to_numpy(dtype=np.float64)
-            acc = np.zeros((len(ids), len(pids)))
-            for d in range(V.shape[1]):
-                acc += V[:, d, None] * P[None, :, d]
-            cos = acc / (vn[:, None] * pn[None, :])
-            out.append(ids[(cos >= tau).any(axis=1)])
-        dup = np.concatenate(out) if out else np.array([], dtype=np.int64)
-        return pd.DataFrame({id_col: dup})
-
-    return (
-        arrivals.select("cell", id_col, vec_col, "v_norm")
-        .groupBy("cell")
-        .cogroup(
-            indexed.select("cell", "index_id", "index_emb", "index_norm")
-            .groupBy("cell")
-        )
         .applyInPandas(gate, f"{id_col} bigint")
     )
 

@@ -131,6 +131,35 @@ def test_span_dedup_removes_repeated_span(spark, tmp_path):
     assert rows[2]["n_tokens_kept"] == 16
 
 
+@pytest.mark.parametrize("ansi", ["true", "false"])
+def test_span_dedup_guard_rejects_long_min_under_any_ansi(spark, tmp_path, ansi):
+    """doc_id = Long.MIN_VALUE is outside the doc_id*1e8+idx key
+    domain: the guard must raise its own domain message whether or
+    not ANSI is on (abs(Long.MIN_VALUE) wraps negative with ANSI off
+    and overflows with it on)."""
+    import pandas as pd
+
+    from rstreams_spark.queries.textq import span_dedup
+
+    text_ = " ".join(f"w{i}" for i in range(20))
+    pd.DataFrame(
+        {
+            "doc_id": [-(2**63), 1],
+            "text": [text_, text_],
+            "lang": ["en", "en"],
+            "source": ["t", "t"],
+            "n_chars": [len(text_)] * 2,
+        }
+    ).to_parquet(f"{tmp_path}/documents.parquet")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises(Exception, match="span_dedup:"):
+            span_dedup(spark, str(tmp_path)).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_doc_commonness_exact_formula(spark, tmp_path):
     """commonness = Σ df(term occurrences) / (n_tokens · n_docs),
     exact rational: docs {a b, a c} → both (2+1)/(2·2) = 0.75."""

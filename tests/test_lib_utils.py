@@ -345,9 +345,13 @@ def test_table_handle_memo_and_rewrite_invalidation(spark, tmp_path):
     keyed by (path, mtime, size) — same file returns the same object
     (no footer re-read per query build), a REWRITTEN file misses the
     cache and serves the new rows (regenerated probe corpora stay
-    correct within one process)."""
+    correct within one process). A part file rewritten IN PLACE inside
+    a parquet directory (the directory's own stat unchanged) misses
+    too."""
     import shutil
     import time as _time
+
+    import pandas as pd
 
     from rstreams_spark.queries._util import t
 
@@ -363,6 +367,21 @@ def test_table_handle_memo_and_rewrite_invalidation(spark, tmp_path):
     _time.sleep(0.01)  # ensure a distinct mtime_ns even on coarse fs
     spark.range(7).toDF("doc_id").write.parquet(str(d / "documents.parquet"))
     c = t(spark, str(d), "documents")
+    assert c is not a
+    assert c.count() == 7
+    # directory input: overwrite its one part file in place
+    e = tmp_path / "sfY" / "documents.parquet"
+    e.mkdir(parents=True)
+    part = e / "part-0.parquet"
+    pd.DataFrame({"doc_id": range(5)}).to_parquet(part)
+    a = t(spark, str(e.parent), "documents")
+    assert a is t(spark, str(e.parent), "documents")
+    assert a.count() == 5
+    dir_stat = e.stat()
+    _time.sleep(0.01)
+    pd.DataFrame({"doc_id": range(7)}).to_parquet(part)
+    assert e.stat().st_mtime_ns == dir_stat.st_mtime_ns
+    c = t(spark, str(e.parent), "documents")
     assert c is not a
     assert c.count() == 7
 

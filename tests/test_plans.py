@@ -442,62 +442,6 @@ def test_bucketed_join_needs_no_shuffle(spark, tmp_path):
         spark.sql("drop table if exists ev_bkt_b")
 
 
-def test_cogroup_gate_inherits_bucketed_index_layout(spark, tmp_path):
-    """The embedding gate's cogroup kernel requires each side
-    clustered by cell INDEPENDENTLY, so a semantic index written
-    bucketed by cell satisfies its side with zero exchange — each
-    trigger shuffles only the arriving batch (r10 verdict item 7:
-    the union→groupBy kernel shape re-shuffles BOTH sides because a
-    union discards child partitioning). Pins: 1 exchange for the
-    cogroup plan over the bucketed index (arrivals only) vs 2 for
-    plain; row-identical dup sets across all three shapes."""
-    from pyspark.sql import functions as F
-    from rstreams_spark.functions.similarity import l2_norm, rankable_norm
-    from rstreams_spark.queries._util import t as load
-    from rstreams_spark.queries.dedupq import COSINE_TAU, ivf_assign_np
-    from rstreams_spark.sinks.writers import write_bucketed
-    from rstreams_spark.streaming.dedup import (
-        _cell_dup_ids_np, _cell_dup_ids_np_cogroup, embedding_index,
-    )
-
-    vecs = (
-        load(spark, SF_SMOKE, "embeddings").select("vec_id", "embedding")
-        .where(F.col("embedding").isNotNull())
-        .localCheckpoint()
-    )
-    cents, indexed = embedding_index(vecs)
-    cents = cents.localCheckpoint()
-    indexed_plain = indexed.localCheckpoint()
-    write_bucketed(indexed_plain, "idx_cell_bkt",
-                   str(tmp_path / "idx"), ["cell"], 8)
-    arrivals = (
-        ivf_assign_np(
-            vecs.select((F.col("vec_id") + 100000).alias("vec_id"),
-                        "embedding"),
-            cents,
-        )
-        .withColumn("v_norm", l2_norm(F.col("embedding")))
-        .where(rankable_norm(F.col("v_norm")))
-        .localCheckpoint()
-    )
-    try:
-        bkt = spark.table("idx_cell_bkt")
-        union_df = _cell_dup_ids_np(arrivals, indexed_plain, COSINE_TAU)
-        cg_plain = _cell_dup_ids_np_cogroup(
-            arrivals, indexed_plain, COSINE_TAU)
-        cg_bkt = _cell_dup_ids_np_cogroup(arrivals, bkt, COSINE_TAU)
-        # count BEFORE executing: an executed AQE plan's formatted
-        # output repeats each exchange in its initial+final sections
-        assert plans.count_shuffles(cg_bkt) == 1      # arrivals only
-        assert plans.count_shuffles(cg_plain) == 2    # both sides
-        base = sorted(r["vec_id"] for r in union_df.collect())
-        assert len(base) > 0  # exact copies of index vectors are dups
-        assert sorted(r["vec_id"] for r in cg_plain.collect()) == base
-        assert sorted(r["vec_id"] for r in cg_bkt.collect()) == base
-    finally:
-        spark.sql("drop table if exists idx_cell_bkt")
-
-
 def test_minhash_lsh_topk_signature_reused(spark):
     """The signature frame feeds three consumers (band pairs + both
     verify sides); it must be served from ONE materialized
