@@ -3,11 +3,12 @@
 
 SF ?= /root/testdata/sf0.01
 
-.PHONY: test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench
+.PHONY: test perfbench-test oracle bench bench-check smoke examples plans scaling sf1 sf10 sf30 verify probes bucketed-bench
 
 # the full drive recipe (.claude/skills/verify/SKILL.md) in one
-# command: driver contract -> full oracle gate replica -> pytest
-verify: smoke oracle test
+# command: driver contract -> full oracle gate replica -> pytest ->
+# the benchmark's own tests
+verify: smoke oracle test perfbench-test
 
 plans:
 	python tools/plan_audit.py
@@ -32,6 +33,10 @@ bucketed-bench:
 
 test:
 	python -m pytest tests/ -x -q
+
+# the benchmark harness's own tests (perfbench/, outside tier-1)
+perfbench-test:
+	python3 -m pytest perfbench -q
 
 oracle:
 	python tools/oracle_check.py $(SF)

@@ -138,10 +138,11 @@ def merge_payloads(payloads: list[dict]) -> dict:
     """Merge N successful child payloads into the min-of-N artifact:
     per-query MIN of each run's median, per-run totals under
     ``totals``, streaming rates as per-metric best with raw run lists
-    concatenated. A query errored in SOME run but timed in another
-    keeps its time; a query timed in NO run rides ``errors`` and
-    flags the artifact invalid (partial totals must never read as
-    speedups)."""
+    concatenated (a rate is ``None`` only when every run missed it,
+    and then keeps its null reason). A query errored in SOME run but
+    timed in another keeps its time; a query timed in NO run rides
+    ``errors`` and flags the artifact invalid (partial totals must
+    never read as speedups)."""
     qs: dict[str, float] = {}
     for p in payloads:
         for k, v in p.get("queries", {}).items():
@@ -156,7 +157,9 @@ def merge_payloads(payloads: list[dict]) -> dict:
         s = p.get("streaming", {})
         for rate, runs in _RATE_RUNS.items():
             if rate in s and rate in streaming:
-                streaming[rate] = max(streaming[rate], s[rate])
+                # a missed measurement reads None; the best real draw wins
+                drawn = [v for v in (streaming[rate], s[rate]) if v is not None]
+                streaming[rate] = max(drawn) if drawn else None
                 streaming[runs] = (
                     list(streaming.get(runs, [])) + list(s.get(runs, []))
                 )
@@ -165,6 +168,8 @@ def merge_payloads(payloads: list[dict]) -> dict:
                 streaming[runs] = list(s.get(runs, []))
         for k, v in s.items():  # carry err keys etc. from later runs
             streaming.setdefault(k, v)
+    if streaming.get("stateful_processed_rows_per_sec") is not None:
+        streaming.pop("stateful_null_reason", None)
     merged = {
         "metric": "headline_queries_total_wall",
         "value": round(sum(qs.values()), 3),

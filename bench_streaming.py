@@ -99,7 +99,8 @@ def _collapsed(results: list[tuple[float, int, int]]) -> bool:
     r12): offered > capacity makes every batch swallow the accumulated
     lag, so on a degraded host batch 2 grows to 100 M+ rows and the
     wait window only ever sees the cold batch — the engine is
-    processing millions of rows/s but the measurement reads 0."""
+    processing millions of rows/s but the measurement reads 0. The
+    stateful rate uses the same rule to report ``None``, not 0."""
     return _median_run(results)[0] == 0
 
 
@@ -165,23 +166,9 @@ def measure(spark, offered: int = OFFERED_ROWS_PER_SEC,
 STATEFUL_ROWS_PER_BATCH = 2_000_000
 
 
-def measure_stateful(spark, rows_per_batch: int = STATEFUL_ROWS_PER_BATCH,
-                     min_batches: int = MIN_BATCHES,
-                     max_wait: float = MAX_WAIT_SECONDS,
-                     repeats: int = REPEATS) -> dict:
-    """Throughput of the Arrow-stateful path (applyInPandasWithState
-    lag buffer over 100 keys) — the honest Python-side number to set
-    against the JVM windowed-agg rate. The remaining ~6× gap is
-    Arrow transfer + state round-trips (the per-row Python loop that
-    used to cap this at ~0.8 M rows/s is gone — buffers are numpy
-    sliding-window views now); operators that CAN be JVM
-    aggregations should be (and in this engine are).
-
-    Uses ``rate-micro-batch`` (fixed rows/batch), not ``rate``: with
-    an offered rate above capacity the plain rate source's backlog
-    balloons every batch (each trigger swallows the accumulated lag),
-    so N batches never complete inside the wait window — which is
-    exactly how r02's artifact lost its stateful number."""
+def _lag_pipeline(spark, rows_per_batch: int):
+    """The measured stateful pipeline: rate-micro-batch source →
+    ``stream_lag_window`` over 100 long keys."""
     from pyspark.sql import functions as F
 
     from rstreams_spark.sources.files import stream_rate_micro_batch
@@ -194,22 +181,54 @@ def measure_stateful(spark, rows_per_batch: int = STATEFUL_ROWS_PER_BATCH,
         .withColumn("key", (F.col("value") % 100).cast("long"))
         .withColumn("v", F.col("value").cast("double"))
     )
-    out = stream_lag_window(
+    return stream_lag_window(
         src.select("key", F.col("timestamp").alias("ts"), "v"),
         "key", "ts", 2, "v",
     )
+
+
+def measure_stateful(spark, rows_per_batch: int = STATEFUL_ROWS_PER_BATCH,
+                     min_batches: int = MIN_BATCHES,
+                     max_wait: float = MAX_WAIT_SECONDS,
+                     repeats: int = REPEATS) -> dict:
+    """Throughput of the Arrow-stateful path (applyInPandasWithState
+    lag buffer over 100 keys) — the honest Python-side number to set
+    against the JVM windowed-agg rate. The gap is mostly per-task
+    framework cost, not the kernel or Arrow transfer: an empty
+    applyInPandasWithState kernel costs about as much per trigger,
+    and that cost scales with the state-partition (task) count, not
+    the key count (PERF.md "One wave per trigger"). Operators that
+    CAN be JVM aggregations should be (and in this engine are).
+
+    Uses ``rate-micro-batch`` (fixed rows/batch), not ``rate``: with
+    an offered rate above capacity the plain rate source's backlog
+    balloons every batch (each trigger swallows the accumulated lag),
+    so N batches never complete inside the wait window — which is
+    exactly how r02's artifact lost its stateful number.
+
+    A run set whose median run committed fewer than 2 batches has no
+    warm rate: the rate reads ``None`` with ``stateful_null_reason``,
+    never 0 (r13's "0 rows/s" artifact), and the raw runs stay."""
+    out = _lag_pipeline(spark, rows_per_batch)
     results = [
         _run_stream(out, "bench_stream_state_ckpt_", min_batches, max_wait)
         for _ in range(repeats)
     ]
     med = _median_run(results)
-    return {
+    collapsed = _collapsed(results)
+    res = {
         "stateful_rows_per_batch": rows_per_batch,
-        "stateful_processed_rows_per_sec": round(med[0]),
+        "stateful_processed_rows_per_sec": None if collapsed else round(med[0]),
         "stateful_runs": [round(r[0]) for r in results],
         "stateful_run_batches": [r[1] for r in results],
         "stateful_batches": med[1],
     }
+    if collapsed:
+        res["stateful_null_reason"] = (
+            f"median run committed {med[1]} batch(es) in {max_wait:.0f} s; "
+            "a warm rate needs >= 2"
+        )
+    return res
 
 
 # Ingest near-dup gates (the 100 TB door): docs/vectors per second

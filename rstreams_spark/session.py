@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+_SHUFFLE_PARTITIONS_KEY = "spark.sql.shuffle.partitions"
 
 
 def _default_driver_mem() -> str:
@@ -31,21 +31,34 @@ def _default_driver_mem() -> str:
 def get_spark(
     app_name: str = "rstreams_spark",
     master: str | None = None,
-    shuffle_partitions: int = DEFAULT_SHUFFLE_PARTITIONS,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with scale-appropriate defaults.
 
     AQE is on so post-shuffle partition counts, skew joins and
     dynamic broadcast decisions adapt at runtime — the same configs
-    we would ship to a 1000-executor cluster; only ``master`` and the
-    partition count are local-mode artifacts.
+    we would ship to a 1000-executor cluster; only ``master`` is a
+    local-mode artifact.
+
+    ``spark.sql.shuffle.partitions`` defaults to the session's task
+    slots (``sparkContext.defaultParallelism``: N for ``local[N]``,
+    the total executor cores on a static cluster). Structured
+    streaming runs without AQE, so this count is the state-store
+    partition count, and the task count, of every stateful trigger;
+    at the task slots a trigger runs in one wave (PERF.md "One wave
+    per trigger"). An ``extra_conf`` entry for the key wins over
+    the default. A checkpoint keeps the count it was created with
+    for its whole life, so create a stateful query's checkpoint on
+    the session size it will run at: a checkpoint created on 4 slots
+    runs 4 state tasks per trigger even on a larger cluster later.
+    The default lives in this session's SQLConf only; ``oha_session``
+    copies it into its sibling, other ``newSession()`` siblings fall
+    back to Spark's 200.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # batch exchanges START wide and let AQE coalesce down by
@@ -56,8 +69,9 @@ def get_spark(
         # initial (16.2 s, 3.2× on 3× data). Small stages coalesce
         # to the same few partitions as before, so sf0.1 plans and
         # times are unchanged. Streaming is unaffected: structured
-        # streaming ignores AQE, so state-store partitioning stays
-        # pinned at spark.sql.shuffle.partitions.
+        # streaming ignores AQE, and its state-store partition count
+        # is spark.sql.shuffle.partitions at checkpoint creation (see
+        # the default below).
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
             os.environ.get("SPARK_GRAFT_INITIAL_PARTITIONS", "256"),
@@ -92,9 +106,15 @@ def get_spark(
         # small-buffer minhash pipelines via ``oha_session`` below.
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if _SHUFFLE_PARTITIONS_KEY not in extra_conf:
+        # the task slots are known only once the context exists
+        slots = spark.sparkContext.defaultParallelism
+        spark.conf.set(_SHUFFLE_PARTITIONS_KEY, str(slots))
+    return spark
 
 
 def gc_hygiene(spark: SparkSession) -> None:
@@ -146,6 +166,10 @@ def oha_session(spark: SparkSession) -> SparkSession:
     if cached is not None:
         return cached
     sub = spark.newSession()
+    # a sibling starts from SparkConf, not the parent's SQLConf
+    sub.conf.set(
+        _SHUFFLE_PARTITIONS_KEY, spark.conf.get(_SHUFFLE_PARTITIONS_KEY)
+    )
     sub.conf.set(
         "spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         str(OHA_THRESHOLD),

@@ -12,6 +12,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", shuffle_partitions=8)
+    s = get_spark("tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     s.sparkContext.setLogLevel("ERROR")
     yield s

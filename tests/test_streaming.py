@@ -568,41 +568,63 @@ def test_stream_exact_dedup_within_watermark(spark, tmp_path):
     assert got == [("a", 1.0), ("b", 2.0), ("c", 3.0)]
 
 
+def _state_partitions(q) -> int:
+    """The state-store partition count the query's last batch ran."""
+    ops = [p["stateOperators"] for p in q.recentProgress if p["stateOperators"]]
+    return ops[-1][0]["numShufflePartitions"]
+
+
 def test_checkpoint_restart_carries_state(spark, tmp_path):
     """Persistence parity (reference src/join.rs test_inner_join_with_
     persistence + src/store.rs redb Store): stop a checkpointed
     stateful query, deliver more data, restart from the checkpoint —
-    per-key buffer state survives the restart."""
-    src = tmp_path / "src"
-    ckpt = str(tmp_path / "ckpt")
-    sink = str(tmp_path / "sink")
-    _write_batch(tmp_path, "src", [("a", 1, 1.0)])
+    per-key buffer state survives the restart. The second case
+    restarts under a different session spark.sql.shuffle.partitions:
+    the checkpoint keeps the state-partition count it was created
+    with, so a session default that follows the task slots never
+    reshuffles existing state."""
+    key = "spark.sql.shuffle.partitions"
+    session_parts = spark.conf.get(key)
+    for case, restart_parts in (("same", None), ("resized", "3")):
+        root = tmp_path / case
+        src = root / "src"
+        ckpt = str(root / "ckpt")
+        sink = str(root / "sink")
+        _write_batch(root, "src", [("a", 1, 1.0)])
 
-    def start():
-        stream = files.stream_files(spark, str(src), "json", SCHEMA)
-        out = stateful.stream_lag_window(stream, "key", "ts", 2, "v")
-        return (
-            out.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
+        def start():
+            stream = files.stream_files(spark, str(src), "json", SCHEMA)
+            out = stateful.stream_lag_window(stream, "key", "ts", 2, "v")
+            return (
+                out.writeStream.format("parquet")
+                .option("path", sink)
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .start()
+            )
 
-    q = start()
-    q.processAllAvailable()
-    q.stop()  # first run: buffer holds [1.0], nothing emitted yet
+        q = start()
+        q.processAllAvailable()
+        first_parts = _state_partitions(q)
+        q.stop()  # first run: buffer holds [1.0], nothing emitted yet
 
-    with open(src / "part-1.json", "w") as f:
-        ts = (EPOCH + dt.timedelta(seconds=2)).strftime("%Y-%m-%dT%H:%M:%S")
-        f.write(json.dumps({"key": "a", "ts": ts, "v": 2.0}) + "\n")
+        with open(src / "part-1.json", "w") as f:
+            ts = (EPOCH + dt.timedelta(seconds=2)).strftime("%Y-%m-%dT%H:%M:%S")
+            f.write(json.dumps({"key": "a", "ts": ts, "v": 2.0}) + "\n")
 
-    q2 = start()  # NEW query object, same checkpoint
-    q2.processAllAvailable()
-    q2.stop()
+        if restart_parts is not None:
+            spark.conf.set(key, restart_parts)
+        try:
+            q2 = start()  # NEW query object, same checkpoint
+            q2.processAllAvailable()
+            restarted_parts = _state_partitions(q2)
+            q2.stop()
+        finally:
+            spark.conf.set(key, session_parts)
 
-    rows = spark.read.parquet(sink).collect()
-    assert [tuple(r["values"]) for r in rows] == [(1.0, 2.0)]
+        assert restarted_parts == first_parts, case
+        rows = spark.read.parquet(sink).collect()
+        assert [tuple(r["values"]) for r in rows] == [(1.0, 2.0)], case
 
 
 def test_stream_tumbling_gapfill_emits_empty_windows(spark, tmp_path):

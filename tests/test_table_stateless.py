@@ -96,10 +96,12 @@ def test_chunk_timeout_partitioned(spark):
 
 def test_global_ordinal_and_chunk_timeout_cross_shard(spark):
     """The distributed global forms must equal the sequential
-    definition on data that spans MANY range shards (200 rows over
-    32 shuffle partitions → every shard boundary is exercised):
-    ordinal = sorted position, sessions split exactly at >gap
-    silences, chunks every `size` rows within a session."""
+    definition on data that spans MANY range shards: ordinal = sorted
+    position, sessions split exactly at >gap silences, chunks every
+    `size` rows within a session. AQE would coalesce these 200 rows
+    into ONE range shard, so the test runs with it off: the range
+    exchange then keeps the fixture's 8 shuffle partitions and every
+    shard boundary is exercised."""
     import datetime as dt
 
     import random
@@ -113,18 +115,28 @@ def test_global_ordinal_and_chunk_timeout_cross_shard(spark):
     df = spark.createDataFrame(
         [Row(ts=base + dt.timedelta(seconds=s), n=i) for i, s in enumerate(secs)]
     )
-    got_ord = {
-        r["n"]: r["__ord"]
-        for r in stateless.ordinal(df, ["ts", "n"]).collect()
-    }
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        shards = (
+            df.repartitionByRange("ts", "n")
+            .select(F.spark_partition_id().alias("p")).distinct().count()
+        )
+        got_ord = {
+            r["n"]: r["__ord"]
+            for r in stateless.ordinal(df, ["ts", "n"]).collect()
+        }
+        got = {
+            r["n"]: (r["__session"], r["__chunk"])
+            for r in stateless.chunk_timeout(
+                df, 7, 10, "ts", order_by=["ts", "n"]
+            ).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert shards == int(spark.conf.get("spark.sql.shuffle.partitions")) > 1
     assert got_ord == {i: i for i in range(200)}  # secs increase with i
 
-    got = {
-        r["n"]: (r["__session"], r["__chunk"])
-        for r in stateless.chunk_timeout(
-            df, 7, 10, "ts", order_by=["ts", "n"]
-        ).collect()
-    }
     sess = chunk_pos = 0
     for i, s in enumerate(secs):
         if i and s - secs[i - 1] > 10:

@@ -11,8 +11,12 @@ discipline, executable: `make bench-check` after two fresh
 `make bench` runs; exit code 1 on any confirmed regression (CI-able).
 
 Streaming rates get the reciprocal check (both last runs below
-min-rate-seen / THRESHOLD). Queries without at least one earlier
-baseline run are reported as "new" and never fail the gate.
+min-rate-seen / THRESHOLD). A rate a run recorded as null (a missed
+measurement, with its reason) gates as a zero rate and is printed as
+a note with its reason, never skipped silently; a confirmed
+regression it takes part in carries the reason too. Queries without
+at least one earlier baseline run are reported as "new" and never
+fail the gate.
 
 Usage:
     python tools/bench_check.py [--threshold 1.5]
@@ -71,6 +75,8 @@ STREAM_KEYS = (
     "gate_minhash_docs_per_sec",
     "gate_embedding_vecs_per_sec",
 )
+# where a run records why a rate is null (bench_streaming.measure_stateful)
+NULL_REASONS = {"stateful_processed_rows_per_sec": "stateful_null_reason"}
 
 
 def load_history(path: str) -> list[dict]:
@@ -129,7 +135,23 @@ def check(runs: list[dict], threshold: float = THRESHOLD,
         return (r.get("streaming") or {}).get("stateless_fallback")
 
     for key in STREAM_KEYS:
-        cur = [(r.get("streaming") or {}).get(key) for r in last_two]
+        streams = [r.get("streaming") or {} for r in last_two]
+        # a rate recorded as null is a missed measurement: it gates as
+        # a zero rate and is noted with its reason, never skipped (a
+        # rate never recorded is simply not measured)
+        nulls = [s for s in streams if key in s and s[key] is None]
+        why = ""
+        if nulls:
+            reason_key = NULL_REASONS.get(key)
+            why = "; ".join(sorted({
+                s.get(reason_key) or "no reason recorded" for s in nulls
+            }))
+            notes.append(
+                f"streaming {key}: null in {len(nulls)} of the last two "
+                f"runs ({why})"
+            )
+        cur = [0 if key in s and s[key] is None else s.get(key)
+               for s in streams]
         if any(c is None for c in cur):
             continue
         cur_bases = {basis(r, key) for r in last_two}
@@ -157,6 +179,7 @@ def check(runs: list[dict], threshold: float = THRESHOLD,
             bad.append(
                 f"streaming {key}: last two runs {cur[0]}/{cur[1]} vs "
                 f"history max {ceil} (< 1/{threshold}x, confirmed)"
+                + (f"; null: {why}" if why else "")
             )
     return bad, notes
 
